@@ -22,3 +22,7 @@ __version__ = "0.1.0"
 
 TOKEN_MISSING = -1  # sentinel token == NaN/cloud-masked in the reference
 VALUE_SCALE = 10000.0  # reference value convention [0, 10000] (ccdc.py:125)
+
+from .session import patch_worker_zipimport as _patch_worker_zipimport
+
+_patch_worker_zipimport()  # no-op outside reused Spark Python workers

@@ -3,15 +3,16 @@
 One block = one (source, doc_id, block bucket) — a block is NEVER split
 across tasks (SURVEY.md §7.3).
 
-Granularity design: the shuffle key is a HASH BUCKET of series
-(source, xxhash64(doc_id) % groups_per_source) — each applyInPandas call
-receives many whole series and encodes ALL their blocks in one pass, with
-per-(series, bucket) runs found by numpy change detection on the sorted
-frame. Grouping by (series, bucket) directly would create millions of tiny
-groups and drown in Spark's per-group applyInPandas machinery (measured
-~8 ms/group — 60x slower than the codec itself); hash-bucketing amortizes
-that overhead to ~zero while `groups_per_source` bounds per-task memory at
-cluster scale (results are independent of it).
+Granularity design: the shuffle key is a HASH BUCKET of the series,
+xxhash64(source, doc_id) % n_groups — each applyInPandas call receives
+many whole series, of any source, and encodes ALL their blocks in one
+pass, with per-(source, doc, bucket) runs found by numpy change detection
+on the sorted frame. Grouping by (series, bucket) directly would create
+millions of tiny groups and drown in Spark's per-group applyInPandas
+machinery (measured ~8 ms/group — 60x slower than the codec itself).
+n_groups defaults to session.input_groups, sized from the input, so each
+group carries enough points to amortize that overhead while per-task
+memory stays bounded at cluster scale (results are independent of it).
 
 encode_blocks:  points -> (source, doc_id, bucket_ts, n_points, min/max ts,
                            codec, block: binary)
@@ -27,7 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gorilla import decode_blocks_batch, encode_block, encode_blocks_batched
+from ..operators.rollup import _dt_ns
+from .gorilla import decode_blocks_batch, encode_blocks_batched
 
 BLOCK_SCHEMA = (
     "source string, doc_id string, bucket_ts timestamp, n_points long, "
@@ -38,78 +40,67 @@ POINTS_SCHEMA = "source string, doc_id string, ts timestamp, value double"
 CODEC_NAME = "gorilla-dod-xor-v1"
 
 
-def _dt_ns(ns) -> np.ndarray:
-    """int64 epoch-ns ndarray → datetime64[ns], as a free reinterpret.
-    pd.to_datetime on integer input takes the per-element object path
-    (~0.28 s per million rows); the values are identical."""
-    return np.ascontiguousarray(ns, dtype=np.int64).view("datetime64[ns]")
+def _by_series_bucket(df: DataFrame, n_groups: int | None):
+    """Group `df` by a hash bucket of its series key (see module doc)."""
+    from ..session import input_groups, repartition_for_kernel
+
+    n_groups = n_groups or input_groups(df)
+    grouped = df.withColumn(
+        "_g", F.pmod(F.xxhash64("source", "doc_id"), F.lit(n_groups))
+    )
+    return repartition_for_kernel(grouped, "_g").groupBy("_g")
+
+
+def _encode_points(
+    pdf: pd.DataFrame, block_seconds: int, value_col: str
+) -> pd.DataFrame:
+    """Encode one group's points into blocks, one per (source, doc,
+    bucket) run.
+
+    Canonical (doc_id, source, ts, value) order: with tied timestamps in
+    one series+bucket, a (doc_id, ts)-only sort would leave tied rows in
+    shuffle-arrival order and the block bytes would differ across
+    parallelism — and from the stream _seal / compact_blocks paths, which
+    already canonicalize ties. Same tie-break everywhere keeps the
+    byte-identity contract a pure function of the point multiset."""
+    pdf = pdf.sort_values(["doc_id", "source", "ts", value_col], kind="mergesort")
+    src = pdf["source"].to_numpy()
+    docs = pdf["doc_id"].to_numpy()
+    new = np.r_[True, (src[1:] != src[:-1]) | (docs[1:] != docs[:-1])]
+    first = np.flatnonzero(new)
+    return block_frame(
+        src[first],
+        docs[first],
+        np.cumsum(new) - 1,
+        (pdf["ts"].astype("int64") // 10**3).to_numpy(),
+        pdf[value_col].to_numpy(dtype=np.float64),
+        block_seconds,
+    )
 
 
 def encode_blocks(
     points: DataFrame,
     block_seconds: int = 3600,
     value_col: str = "value",
-    groups_per_source: int | None = None,
+    n_groups: int | None = None,
 ) -> DataFrame:
     """Compress raw points into per-(series, bucket) Gorilla blocks.
 
-    groups_per_source: task granularity (hash buckets of doc_id per source);
-    tune so one group's points fit executor memory. Output is independent
-    of it — blocks are keyed by (source, doc_id, bucket_ts) only.
+    n_groups: task granularity (hash buckets of (source, doc_id)); tune so
+    one group's points fit executor memory. Output is independent of it —
+    blocks are keyed by (source, doc_id, bucket_ts) only.
     """
-
-    def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Canonical (doc_id, ts, value) order: with tied timestamps in one
-        # series+bucket, a (doc_id, ts)-only sort would leave tied rows in
-        # shuffle-arrival order and the block bytes would differ across
-        # parallelism — and from the stream _seal / compact_blocks paths,
-        # which already canonicalize ties. Same tie-break everywhere keeps
-        # the byte-identity contract a pure function of the point multiset.
-        pdf = pdf.sort_values(["doc_id", "ts", value_col], kind="mergesort")
-        epoch_us = (pdf["ts"].astype("int64") // 10**3).to_numpy()
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        docs = pdf["doc_id"].to_numpy()
-        bucket = epoch_us - epoch_us % (block_seconds * 10**6)
-        # run boundaries: new series OR new bucket (frame sorted by doc, ts)
-        new_doc = docs[1:] != docs[:-1]
-        new_bkt = np.diff(bucket) != 0
-        cut = np.flatnonzero(new_doc | new_bkt) + 1
-        starts = np.r_[0, cut]
-        ends = np.r_[cut, len(bucket)]
-        blocks = encode_blocks_batched(
-            [epoch_us[s:e] for s, e in zip(starts, ends)],
-            [vals[s:e] for s, e in zip(starts, ends)],
-        )
-        return pd.DataFrame(
-            {
-                "source": np.repeat(pdf["source"].iloc[0], len(starts)),
-                "doc_id": docs[starts],
-                "bucket_ts": _dt_ns(bucket[starts] * 10**3),
-                "n_points": (ends - starts).astype(np.int64),
-                "min_ts": _dt_ns(epoch_us[starts] * 10**3),
-                "max_ts": _dt_ns(epoch_us[ends - 1] * 10**3),
-                "codec": CODEC_NAME,
-                "block": blocks,
-            }
-        )
-
-    from ..session import default_groups, repartition_for_kernel
-
-    groups_per_source = groups_per_source or default_groups(
-        points, minimum=256, per_core=8
-    )
-    grouped = points.withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
-    )
-    return repartition_for_kernel(grouped, "source", "_g").groupBy("source", "_g").applyInPandas(
-        _encode, schema=BLOCK_SCHEMA
+    return _by_series_bucket(points, n_groups).applyInPandas(
+        lambda pdf: _encode_points(pdf, block_seconds, value_col),
+        schema=BLOCK_SCHEMA,
     )
 
 
 def block_frame(src_arr, doc_arr, d, ep_us, vals, block_seconds):
     """Pure-numpy block fold over one decoded batch -> pandas frame of
-    encoded Gorilla blocks (one row per (doc, bucket) run; the decoded
-    arrays must be (doc, ts)-sorted, which token order guarantees)."""
+    encoded Gorilla blocks (one row per (doc, bucket) run; point i belongs
+    to series d[i] = (src_arr[d[i]], doc_arr[d[i]]), and the arrays must
+    be (d, ts)-sorted, which token order guarantees)."""
     bucket = ep_us - ep_us % (block_seconds * 10**6)
     newblk = np.r_[True, (d[1:] != d[:-1]) | (bucket[1:] != bucket[:-1])]
     bs = np.flatnonzero(newblk)
@@ -176,7 +167,7 @@ def encode_blocks_from_tokens(
 def compact_blocks(
     blocks: DataFrame,
     target_seconds: int,
-    groups_per_source: int | None = None,
+    n_groups: int | None = None,
 ) -> DataFrame:
     """Tier compaction for the block store (north-rule retention path):
     merge fine (series, bucket) blocks into coarser `target_seconds`
@@ -214,12 +205,18 @@ def compact_blocks(
         # ties fall back to file-read order and the compacted bytes vary
         # across re-runs, breaking the byte-identity contract.
         pdf = pdf.sort_values(
-            ["doc_id", "bucket_ts", "min_ts"], kind="mergesort"
+            ["doc_id", "source", "bucket_ts", "min_ts"], kind="mergesort"
         )
+        src_arr = pdf["source"].to_numpy()
         docs = pdf["doc_id"].to_numpy()
         bkt_us = pdf["bucket_ts"].astype("int64").to_numpy() // 10**3
         coarse = bkt_us - bkt_us % (target_seconds * 10**6)
-        new = np.r_[True, (docs[1:] != docs[:-1]) | (np.diff(coarse) != 0)]
+        new = np.r_[
+            True,
+            (src_arr[1:] != src_arr[:-1])
+            | (docs[1:] != docs[:-1])
+            | (np.diff(coarse) != 0),
+        ]
         bs = np.flatnonzero(new)
         be = np.r_[bs[1:], len(docs)]
         run_len = be - bs
@@ -227,7 +224,6 @@ def compact_blocks(
         multi_blk = run_len[run_id] > 1  # per input block
         single_rs = np.flatnonzero(run_len == 1)
         multi_rs = np.flatnonzero(run_len > 1)
-        src_arr = pdf["source"].to_numpy()
         blk_arr = pdf["block"].to_numpy()
         frames = []
         if len(single_rs):
@@ -299,15 +295,7 @@ def compact_blocks(
             return frames[0]
         return pd.concat(frames, ignore_index=True)
 
-    from ..session import default_groups, repartition_for_kernel
-
-    groups_per_source = groups_per_source or default_groups(
-        blocks, minimum=256, per_core=8
-    )
-    grouped = blocks.withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
-    )
-    return repartition_for_kernel(grouped, "source", "_g").groupBy("source", "_g").applyInPandas(
+    return _by_series_bucket(blocks, n_groups).applyInPandas(
         _compact, schema=BLOCK_SCHEMA
     )
 
@@ -316,55 +304,32 @@ def roundtrip_points(
     points: DataFrame,
     block_seconds: int = 3600,
     value_col: str = "value",
-    groups_per_source: int | None = None,
+    n_groups: int | None = None,
 ) -> DataFrame:
     """encode∘decode in ONE kernel pass — the codec verification path
-    (gorilla_roundtrip). Each group's points are encoded with EXACTLY the
-    batch encoder's grouping/ordering/codec (same bytes as encode_blocks,
-    pinned in tests/test_codec.py) and immediately decoded back; the
-    intermediate block table never crosses the Python↔JVM boundary, which
-    the chained decode_blocks(encode_blocks(...)) pays twice (~800k Arrow
-    rows each way at 1M points). The separate operators remain the store
-    write/read paths; this is pipelining, not a shortcut — every block is
-    fully encoded and fully decoded."""
+    (gorilla_roundtrip). Each group's points are encoded by the batch
+    encoder's own kernel (same bytes as encode_blocks, pinned in
+    tests/test_codec.py) and immediately decoded back; the intermediate
+    block table never crosses the Python↔JVM boundary, which the chained
+    decode_blocks(encode_blocks(...)) pays twice (~800k Arrow rows each way
+    at 1M points). The separate operators remain the store write/read
+    paths; this is pipelining, not a shortcut — every block is fully
+    encoded and fully decoded."""
 
     def _rt(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["doc_id", "ts", value_col], kind="mergesort")
-        epoch_us = (pdf["ts"].astype("int64") // 10**3).to_numpy()
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        docs = pdf["doc_id"].to_numpy()
-        bucket = epoch_us - epoch_us % (block_seconds * 10**6)
-        new_doc = docs[1:] != docs[:-1]
-        new_bkt = np.diff(bucket) != 0
-        cut = np.flatnonzero(new_doc | new_bkt) + 1
-        starts = np.r_[0, cut]
-        ends = np.r_[cut, len(bucket)]
-        blocks = encode_blocks_batched(
-            [epoch_us[s:e] for s, e in zip(starts, ends)],
-            [vals[s:e] for s, e in zip(starts, ends)],
-        )
-        counts, ts, out_vals = decode_blocks_batch(blocks)
+        blocks = _encode_points(pdf, block_seconds, value_col)
+        counts, ts, vals = decode_blocks_batch(blocks["block"].tolist())
         return pd.DataFrame(
             {
-                "source": np.repeat(pdf["source"].iloc[0], len(ts)),
-                "doc_id": np.repeat(docs[starts], counts),
+                "source": np.repeat(blocks["source"].to_numpy(), counts),
+                "doc_id": np.repeat(blocks["doc_id"].to_numpy(), counts),
                 "ts": _dt_ns(ts * 10**3),
-                "value": out_vals,
+                "value": vals,
             }
         )
 
-    from ..session import default_groups, repartition_for_kernel
-
-    groups_per_source = groups_per_source or default_groups(
-        points, minimum=256, per_core=8
-    )
-    grouped = points.withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
-    )
-    return (
-        repartition_for_kernel(grouped, "source", "_g")
-        .groupBy("source", "_g")
-        .applyInPandas(_rt, schema=POINTS_SCHEMA)
+    return _by_series_bucket(points, n_groups).applyInPandas(
+        _rt, schema=POINTS_SCHEMA
     )
 
 

@@ -30,7 +30,10 @@ from pyspark.sql import functions as F
 def _dt_ns(ns):
     """int64 epoch-ns ndarray -> datetime64[ns], as a free reinterpret.
     pd.to_datetime on integer input takes the per-element object path
-    (~0.28 s per million rows); the values are identical."""
+    (~0.28 s per million rows); the values are identical. The view skips
+    pd.to_datetime's out-of-bounds check: a corrupt epoch that overflows
+    on the way to nanoseconds becomes a wrong timestamp instead of an
+    error. Callers pass encoder- and kernel-internal epochs only."""
     import numpy as np
 
     return np.ascontiguousarray(ns, dtype=np.int64).view("datetime64[ns]")

@@ -7,6 +7,7 @@ per-executor; on a real cluster the same builder is used with
 
 from __future__ import annotations
 
+import atexit
 import os
 import zipfile
 from pathlib import Path
@@ -14,6 +15,10 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 _SHIPPED: set[int] = set()
+_ZIP_BUILT = False
+
+# Bytes of kernel input per codec group (see input_groups).
+GROUP_BYTES = 32 << 20
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -22,20 +27,80 @@ def ship_package(spark: SparkSession) -> None:
     Zips the package and registers it via addPyFile — the same mechanism as
     `spark-submit --py-files fusets_spark.zip` on a real cluster (north rule).
     Needed because the driver's sys.path does not propagate to workers.
-    Idempotent per SparkContext.
+    Idempotent per SparkContext. The zip at /tmp/fusets_spark-<pid>.zip is
+    rebuilt on the first ship in each process (a recycled pid must not ship
+    another run's package) and removed when the process exits.
     """
+    global _ZIP_BUILT
     sc = spark.sparkContext
     key = id(sc)
     if key in _SHIPPED:
         return
-    pkg_dir = Path(__file__).resolve().parent
-    zip_path = Path(f"/tmp/fusets_spark-{os.getpid()}.zip")
-    if not zip_path.exists():
-        with zipfile.ZipFile(zip_path, "w") as zf:
+    pid = os.getpid()
+    zip_path = Path(f"/tmp/fusets_spark-{pid}.zip")
+    if not _ZIP_BUILT:
+        pkg_dir = Path(__file__).resolve().parent
+        tmp = zip_path.with_name(zip_path.name + ".tmp")
+        with zipfile.ZipFile(tmp, "w") as zf:
             for p in sorted(pkg_dir.rglob("*.py")):
                 zf.write(p, f"fusets_spark/{p.relative_to(pkg_dir)}")
+        os.replace(tmp, zip_path)
+        atexit.register(_remove_zip, zip_path, pid)
+        _ZIP_BUILT = True
     sc.addPyFile(str(zip_path))
     _SHIPPED.add(key)
+
+
+def _remove_zip(zip_path: Path, pid: int) -> None:
+    if os.getpid() == pid:  # not from a forked child
+        zip_path.unlink(missing_ok=True)
+
+
+def patch_worker_zipimport() -> bool:
+    """Stop reused Python workers from re-reading every zip on sys.path
+    before each task. Returns whether the patch is installed.
+
+    PySpark calls importlib.invalidate_caches() before every task, and up
+    to CPython 3.12 each cached zipimporter then re-parses its archive's
+    whole central directory (pyspark.zip alone is cached under a dozen
+    subpackage paths): 0.2-0.4 s of CPU per task. The replacement re-reads
+    an archive only when its (mtime, size) changed and otherwise keeps the
+    directory already in zipimport's cache, as zipimporter.__init__ does.
+    Archives cached at install time were just re-read by the task that
+    imports this package. Only reused workers (SPARK_REUSE_WORKER set) run
+    a second task; CPython 3.13+ (zipimporter._get_files) re-reads lazily
+    already."""
+    import zipimport
+
+    zi = zipimport.zipimporter
+    if zi.invalidate_caches.__module__ == __name__:
+        return True
+    if not os.environ.get("SPARK_REUSE_WORKER") or hasattr(zi, "_get_files"):
+        return False
+    cache = zipimport._zip_directory_cache
+    reread = zi.invalidate_caches
+
+    def stamp(path):
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        return st.st_mtime_ns, st.st_size
+
+    stamps = {path: stamp(path) for path in cache}
+
+    def invalidate_caches(self):
+        now = stamp(self.archive)
+        if now is not None and now == stamps.get(self.archive):
+            files = cache.get(self.archive)
+            if files is not None:
+                self._files = files
+                return
+        reread(self)
+        stamps[self.archive] = now
+
+    zi.invalidate_caches = invalidate_caches
+    return True
 
 
 def default_groups(
@@ -49,6 +114,23 @@ def default_groups(
     exactly one bucket), pinned by the cross-partitioning parity tests."""
     sc = df.sparkSession.sparkContext
     return max(minimum, sc.defaultParallelism * per_core)
+
+
+def input_groups(df) -> int:
+    """Group count for the codec kernels, sized from the input: one group
+    per GROUP_BYTES of the optimizer's size estimate, floored at
+    defaultParallelism × 4 so a small input still fills every core, and
+    capped at 16× that floor, because an estimate can be far too high (a
+    join's is the product of its inputs'). An unknown estimate
+    (spark.sql.defaultSizeInBytes) takes the floor."""
+    spark = df.sparkSession
+    floor = spark.sparkContext.defaultParallelism * 4
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    # py4j returns a scala BigInt as a JavaObject, a long as an int
+    size = size if isinstance(size, int) else int(size.toString())
+    if size >= spark._jsparkSession.sessionState().conf().defaultSizeInBytes():
+        return floor
+    return min(max(floor, -(-size // GROUP_BYTES)), 16 * floor)
 
 
 def repartition_for_kernel(df, *keys):

@@ -37,8 +37,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..codec.blocks import BLOCK_SCHEMA, CODEC_NAME, _dt_ns
+from ..codec.blocks import BLOCK_SCHEMA, CODEC_NAME
 from ..codec.gorilla import encode_blocks_batched
+from ..operators.rollup import _dt_ns
 
 # open points ride the state store as PACKED BINARY columns (raw numpy
 # buffers + a pickled doc-id array), not array<primitive>: list-typed state

@@ -214,10 +214,17 @@ def test_encode_and_compact_bytes_invariant_to_parallelism(spark):
     to shuffle arrival order across partition counts, INCLUDING tied
     timestamps within one (series, bucket) (the ADVICE r4 medium finding:
     datagen never produces ties, so only an explicit tie fixture exercises
-    the canonical (doc_id, ts, value) sort in encode_blocks._encode).
+    the canonical (doc_id, source, ts, value) sort in _encode_points).
     Also pins multi-batch overlap compaction byte-equality across
-    partition counts (VERDICT r4 next-round #6)."""
-    from fusets_spark.codec.blocks import compact_blocks, encode_blocks
+    partition counts (VERDICT r4 next-round #6). Two sources share every
+    doc_id, and groups hash (source, doc_id) with no per-source split, so
+    at n_groups=1 both sources' series meet in one kernel call: runs must
+    still cut on a change of source."""
+    from fusets_spark.codec.blocks import (
+        compact_blocks,
+        encode_blocks,
+        roundtrip_points,
+    )
 
     rng = np.random.default_rng(7)
     n = 400
@@ -227,7 +234,7 @@ def test_encode_and_compact_bytes_invariant_to_parallelism(spark):
     ts_us = base + np.repeat(
         rng.integers(0, 6 * 3600, size=n // 2), 2
     ) * 10**6
-    pdf = pd.DataFrame(
+    one = pd.DataFrame(
         {
             "source": "s0",
             "doc_id": np.char.add("d-", rng.integers(0, 5, n).astype(str)),
@@ -235,36 +242,55 @@ def test_encode_and_compact_bytes_invariant_to_parallelism(spark):
             "value": rng.normal(size=n).round(3),
         }
     )
+    # the second source repeats the first one's doc ids and timestamps
+    two = one.assign(source="s1", value=rng.normal(size=n).round(3))
+    pdf = pd.concat([one, two], ignore_index=True)
 
     def enc_bag(num_parts, groups):
         df = spark.createDataFrame(pdf).repartition(num_parts)
-        out = encode_blocks(df, block_seconds=3600, groups_per_source=groups)
+        out = encode_blocks(df, block_seconds=3600, n_groups=groups)
         return sorted(
-            (r.source, r.doc_id, r.bucket_ts, bytes(r.block))
+            (r.source, r.doc_id, r.bucket_ts, r.n_points, bytes(r.block))
             for r in out.toPandas().itertuples()
         )
 
     a = enc_bag(1, 2)
-    b = enc_bag(13, 7)
-    assert a == b
+    assert {r[0] for r in a} == {"s0", "s1"}
+    assert sum(r[3] for r in a) == len(pdf)
+    assert enc_bag(13, 7) == a
+    assert enc_bag(4, 1) == a
+
+    def rt_bag(num_parts, groups):
+        df = spark.createDataFrame(pdf).repartition(num_parts)
+        out = roundtrip_points(df, block_seconds=3600, n_groups=groups)
+        return sorted(
+            (r.source, r.doc_id, r.ts.value, r.value)
+            for r in out.toPandas().itertuples()
+        )
+
+    want = sorted(
+        (r.source, r.doc_id, r.ts.value, r.value) for r in pdf.itertuples()
+    )
+    assert rt_bag(4, 1) == want
+    assert rt_bag(13, 7) == want
 
     # overlap compaction: same multiset through two batch splits and two
     # partition counts -> byte-identical coarse blocks
-    half = pdf.iloc[: n // 2], pdf.iloc[n // 2 :]
+    half = pdf.iloc[::2], pdf.iloc[1::2]
 
     def comp_bag(frames, num_parts, groups):
         blks = [
             encode_blocks(
                 spark.createDataFrame(f).repartition(num_parts),
                 block_seconds=3600,
-                groups_per_source=groups,
+                n_groups=groups,
             )
             for f in frames
         ]
         merged = blks[0]
         for x in blks[1:]:
             merged = merged.unionByName(x)
-        out = compact_blocks(merged, 86400, groups_per_source=groups)
+        out = compact_blocks(merged, 86400, n_groups=groups)
         return sorted(
             (r.source, r.doc_id, r.bucket_ts, r.min_ts, r.max_ts,
              bytes(r.block))
@@ -272,8 +298,9 @@ def test_encode_and_compact_bytes_invariant_to_parallelism(spark):
         )
 
     c = comp_bag(half, 1, 2)
-    d = comp_bag(half[::-1], 11, 5)
-    assert c == d
+    assert {r[0] for r in c} == {"s0", "s1"}
+    assert comp_bag(half[::-1], 11, 5) == c
+    assert comp_bag(half, 3, 1) == c
 
 
 def test_roundtrip_points_equals_chained_encode_decode(spark):
