@@ -288,7 +288,7 @@ def q_stream_block_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_csv_load(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _csv_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source loader (reference sits_bridge.py:44-112 load_sits_csv):
     the events table is written out as a WIDE csv at query time (one
     column per event_type band, microsecond timestamps pre-formatted —
@@ -322,7 +322,7 @@ def q_csv_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_netcdf_load(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _netcdf_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     """netCDF source loader (reference sits_bridge.py:115-145
     load_sits_netcdf) through the DISTRIBUTED directory path: the events
     table is aggregated to a per-(event_type, user, day) daily-mean cube,
@@ -422,8 +422,8 @@ def q_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     row under the hard 50-cap for geotiff_load). Both round trips run in
     full — `fmt` tags which loader produced each row, so a regression in
     either one still reddens this row."""
-    csv = q_csv_load(spark, sf_dir).withColumn("fmt", F.lit("csv"))
-    nc = q_netcdf_load(spark, sf_dir).withColumn("fmt", F.lit("nc"))
+    csv = _csv_load(spark, sf_dir).withColumn("fmt", F.lit("csv"))
+    nc = _netcdf_load(spark, sf_dir).withColumn("fmt", F.lit("nc"))
     return csv.unionByName(nc)
 
 
@@ -472,7 +472,7 @@ def q_geotiff_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     nod = -9999.0
     # fixed per-SF dir, fully cleared each run (stale granules from a
     # prior data generation would corrupt the row); local-mode /tmp
-    # sharing assumption as q_netcdf_load
+    # sharing assumption as _netcdf_load
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     root = f"/tmp/fusets_tif_{tag}"
     shutil.rmtree(root, ignore_errors=True)
@@ -521,19 +521,6 @@ def q_geotiff_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         "x",
         _rz(F.col("value"), 6).alias("value"),
-    )
-
-
-def q_output_grid_p5d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ISO-8601 output date grid (reference _xarray_utils.py:43-46
-    _output_dates; the F6 71-date golden is in tests/test_timeaxis.py):
-    P5D spacing over the events month, generated JVM-side with
-    sequence() + explode."""
-    from fusets_spark.timeaxis import output_dates
-
-    _t(spark, sf_dir, "events")  # UTC pin + package ship side effects
-    return output_dates(
-        spark, "P5D", "2024-01-01 00:00:00", "2024-01-30 23:59:59"
     )
 
 
@@ -751,23 +738,6 @@ def q_harmonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "source", "doc_id", "n_obs",
         *[_rz(F.col(f"c{i}"), 4).alias(f"c{i}") for i in range(4)],
-    )
-
-
-def q_harmonic_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-point fitted values of the CCDC harmonic OLS fit (reference
-    ccdc.py:118-154) — the driver-verifiable face of harmonic_fit: fitted
-    values are basis-invariant, so the DuckDB oracle projects y onto the
-    same model space through a sequentially-orthogonalized basis (window
-    sums), avoiding the ill-conditioned raw normal equations."""
-    from fusets_spark.operators.harmonics import harmonic_fitted
-
-    pts = _event_points(spark, sf_dir).select(
-        "source", F.col("doc_id").cast("string").alias("doc_id"), "ts", "value"
-    )
-    out = harmonic_fitted(pts, num_coefficients=4)
-    return out.select(
-        "source", "doc_id", "ts", _rz(F.col("yhat"), 6).alias("yhat")
     )
 
 
@@ -1047,77 +1017,6 @@ def q_multimodal_decode_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
         payload.alias("payload"),
     )
     return decode_media_pixels(media)
-
-
-def _byte(c):  # 1-byte binary from an int column (0-255)
-    return F.unhex(F.lpad(F.hex(c), 2, "0"))
-
-
-def _be32(c):  # big-endian uint32 bytes
-    return F.unhex(F.lpad(F.hex(c), 8, "0"))
-
-
-def _le_bytes(c, n: int):  # little-endian n-byte binary
-    parts = []
-    for i in range(n):
-        parts.append(_byte(F.pmod(F.floor(c / F.lit(256**i)).cast("long"), F.lit(256))))
-    return F.concat(*parts)
-
-
-def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL media-header decode (PNG IHDR + WAV RIFF, pure byte parsing —
-    operators/multimodal.py:parse_media_header). Deterministic container
-    payloads are synthesized JVM-side from the documents table (even doc_id
-    -> PNG, odd -> WAV); the decoder extracts dimensions / channels /
-    sample rate / sample count from the actual bytes, and the DuckDB oracle
-    derives every parsed field + total byte count independently from the
-    same source columns — an end-to-end round-trip of construction+parsing
-    (a wrong byte order or offset in either stage breaks the match)."""
-    from fusets_spark.operators.multimodal import PNG_MAGIC, decode_media_headers
-
-    docs = _t(spark, sf_dir, "documents")
-    doc_id = F.col("doc_id")
-    text_bytes = F.encode("text", "utf-8")
-    n_chars = F.length("text")
-    w = F.pmod(n_chars, F.lit(192)) + F.lit(64)
-    h = F.pmod(n_chars * 7 + 13, F.lit(192)) + F.lit(64)
-    png_payload = F.concat(
-        F.lit(PNG_MAGIC + b"\x00\x00\x00\x0dIHDR"),
-        _be32(w),
-        _be32(h),
-        # bit depth 8, color type 6 (RGBA), compression/filter/interlace 0,
-        # 4 CRC bytes (not validated by the header peek)
-        F.lit(b"\x08\x06\x00\x00\x00" + b"\x00" * 4),
-        text_bytes,
-    )
-    channels = F.pmod(F.floor(doc_id / F.lit(2)).cast("long"), F.lit(2)) + 1
-    sr = F.element_at(
-        F.array(F.lit(8000), F.lit(16000), F.lit(44100)),
-        (F.pmod(doc_id, F.lit(3)) + 1).cast("int"),
-    )
-    block = channels * 2  # 16-bit PCM
-    data_size = F.octet_length("text")
-    wav_payload = F.concat(
-        F.lit(b"RIFF"),
-        _le_bytes(data_size + 36, 4),
-        F.lit(b"WAVEfmt " + b"\x10\x00\x00\x00" + b"\x01\x00"),
-        _le_bytes(channels, 2),
-        _le_bytes(sr, 4),
-        _le_bytes(sr * block, 4),  # byte rate
-        _le_bytes(block, 2),
-        F.lit(b"\x10\x00data"),  # bits=16 LE, data chunk tag
-        _le_bytes(data_size, 4),
-        text_bytes,
-    )
-    src = docs.select(
-        doc_id.cast("string").alias("media_id"),
-        F.when(F.pmod(doc_id, F.lit(2)) == 0, png_payload)
-        .otherwise(wav_payload)
-        .alias("payload"),
-    )
-    # sha256 stays internal: DuckDB's sha256() is VARCHAR-only, so the
-    # oracle checks every PARSED header field + total byte count instead
-    return decode_media_headers(src).drop("sha256")
 
 
 def q_savgol_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2209,45 +2108,6 @@ FROM sh GROUP BY doc_id
 """
 
 
-def _multimodal_oracle() -> str:
-    """Derive every header field of the synthetic PNG/WAV payloads directly
-    from the source columns — parsing parity for the real byte decoder."""
-
-    return """
-WITH d AS (
-  SELECT CAST(doc_id AS VARCHAR) AS media_id, doc_id,
-         length(text) AS n_chars,
-         octet_length(CAST(text AS BLOB)) AS nb
-  FROM documents
-), png AS (
-  SELECT media_id, 'image' AS media_type,
-         CAST(33 + nb AS BIGINT) AS n_bytes,
-         CAST(n_chars % 192 + 64 AS INT) AS width,
-         CAST((n_chars * 7 + 13) % 192 + 64 AS INT) AS height,
-         CAST(NULL AS INT) AS n_channels,
-         CAST(NULL AS INT) AS sample_rate,
-         CAST(NULL AS BIGINT) AS n_samples
-  FROM d WHERE doc_id % 2 = 0
-), wavp AS (
-  SELECT media_id, nb,
-         CAST((doc_id // 2) % 2 + 1 AS INT) AS ch,
-         CAST(CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-              ELSE 44100 END AS INT) AS sr
-  FROM d WHERE doc_id % 2 = 1
-), wav AS (
-  SELECT media_id, 'audio' AS media_type,
-         CAST(44 + nb AS BIGINT) AS n_bytes,
-         CAST(NULL AS INT) AS width,
-         CAST(NULL AS INT) AS height,
-         ch AS n_channels,
-         sr AS sample_rate,
-         CAST(nb // (ch * 2) AS BIGINT) AS n_samples
-  FROM wavp
-)
-SELECT * FROM png UNION ALL SELECT * FROM wav
-"""
-
-
 _GRID_SQL = f"""
   SELECT user_id % {_GRID_W} AS x,
          (user_id // {_GRID_W}) % {_GRID_H} AS y,
@@ -2300,48 +2160,6 @@ WHERE (
              THEN 1 ELSE 0 END)
   FROM e
 ) % 2 = 1
-"""
-
-
-_HARMONIC_FITTED_ORACLE = """
-WITH p AS (
-  SELECT event_type AS source, CAST(user_id AS VARCHAR) AS doc_id, ts,
-         value AS y,
-         (epoch_us(ts) // 1000000) / 86400.0 AS day
-  FROM events
-), t0 AS (
-  SELECT *, day - min(day) OVER w AS t, count(*) OVER w AS n
-  FROM p WINDOW w AS (PARTITION BY source, doc_id)
-), x AS (
-  SELECT source, doc_id, ts, y, t,
-         cos(2 * pi() * t / 365.25) AS xc,
-         sin(2 * pi() * t / 365.25) AS xs
-  FROM t0 WHERE n >= 4
-), g1 AS (  -- u1 = const; center the remaining columns against it
-  SELECT *, avg(y) OVER w AS f1,
-         t  - avg(t)  OVER w AS u2,
-         xc - avg(xc) OVER w AS c2,
-         xs - avg(xs) OVER w AS s2,
-         y  - avg(y)  OVER w AS y2
-  FROM x WINDOW w AS (PARTITION BY source, doc_id)
-), g2 AS (  -- remove the u2 (centered t) component
-  SELECT *,
-    c2 - sum(c2 * u2) OVER w / sum(u2 * u2) OVER w * u2 AS u3,
-    s2 - sum(s2 * u2) OVER w / sum(u2 * u2) OVER w * u2 AS s3,
-    y2 - sum(y2 * u2) OVER w / sum(u2 * u2) OVER w * u2 AS y3,
-    f1 + sum(y2 * u2) OVER w / sum(u2 * u2) OVER w * u2 AS f2
-  FROM g1 WINDOW w AS (PARTITION BY source, doc_id)
-), g3 AS (  -- remove the u3 (orthogonalized cos) component
-  SELECT *,
-    s3 - sum(s3 * u3) OVER w / sum(u3 * u3) OVER w * u3 AS u4,
-    y3 - sum(y3 * u3) OVER w / sum(u3 * u3) OVER w * u3 AS y4,
-    f2 + sum(y3 * u3) OVER w / sum(u3 * u3) OVER w * u3 AS f3
-  FROM g2 WINDOW w AS (PARTITION BY source, doc_id)
-)
-SELECT source, doc_id, ts,
-       round(f3 + sum(y4 * u4) OVER w / sum(u4 * u4) OVER w * u4, 6) + 0.0
-         AS yhat
-FROM g3 WINDOW w AS (PARTITION BY source, doc_id)
 """
 
 

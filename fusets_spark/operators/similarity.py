@@ -251,19 +251,6 @@ def _bucket_strings_kernel(
     return df.mapInPandas(_assign, schema=StructType(fields))
 
 
-def probe_buckets(qvec: np.ndarray, planes: np.ndarray, n_probes: int) -> list[str]:
-    """Query bucket + the n_probes buckets at Hamming distance 1 obtained by
-    flipping the lowest-|margin| planes (classic multi-probe LSH)."""
-    margins = planes @ qvec
-    base = ["1" if m > 0 else "0" for m in margins]
-    out = ["".join(base)]
-    for p in np.argsort(np.abs(margins), kind="stable")[:n_probes]:
-        flipped = base.copy()
-        flipped[p] = "0" if base[p] == "1" else "1"
-        out.append("".join(flipped))
-    return out
-
-
 def ann_topk_lsh(
     embeddings: DataFrame,
     query_vec_id: int,
@@ -597,14 +584,15 @@ def embedding_neardup_pairs(
         # association ((0.0 + t0) + t1) + … — one vectorized
         # multiply-accumulate per dimension, never np.dot (pairwise
         # summation would change ULPs near the threshold) — and each
-        # vector's norm comes in as the SAME Catalyst `_norm` expression
-        # the join form attached, so cosines are bit-identical (pinned
-        # against the naive per-table self-join reference in
-        # tests/test_training_ops.py). The threshold filter and the
-        # 6-dp rounding stay in Catalyst on the kernel's raw output, so
-        # NaN/rounding semantics are exactly the join form's (the kernel
-        # over-emits NaN cosines for Catalyst to keep, matching Spark's
-        # NaN-largest comparison order).
+        # vector's norm comes from the bucket kernel's numpy left-fold
+        # (_bucket_strings_kernel, norm_col), pinned bit-identical to the
+        # Catalyst `_norm` expression by test, so cosines match the join
+        # form exactly (pinned against the naive per-table self-join
+        # reference in tests/test_training_ops.py). The threshold filter
+        # and the 6-dp rounding stay in Catalyst on the kernel's raw
+        # output, so NaN/rounding semantics are exactly the join form's
+        # (the kernel over-emits NaN cosines for Catalyst to keep,
+        # matching Spark's NaN-largest comparison order).
         #
         # Shuffle cost: each vector crosses the (table_no, bucket)
         # exchange once per table with its 64-float payload — corpus ×
@@ -612,9 +600,13 @@ def embedding_neardup_pairs(
         # AQE-exempt so the kernel runs wide even though the stacked
         # table is only a few MB (§2.5). Scale note: a bucket of m
         # vectors is one kernel group with m²/2 candidate pairs — the
-        # same volume the self-join emitted — chunked so peak memory is
-        # bounded; components consumers at 100-TB scale should use the
-        # opt-in star cap below, which bounds the volume itself.
+        # same volume the self-join emitted. Band chunking bounds the
+        # per-band SCRATCH only: every pair that passes the threshold is
+        # still buffered for the group's output, so a hot bucket of
+        # near-identical vectors holds ~m²/2 pairs in one task. Exact-path
+        # consumers of clustered corpora should set max_bucket_size;
+        # components consumers at 100-TB scale should use the opt-in star
+        # cap below, which bounds the volume itself.
         stacked = _stacked(with_payload=True)
         import pandas as pd
 
@@ -642,7 +634,9 @@ def embedding_neardup_pairs(
                         f"embedding length {a.shape[0]} != dim {dim}"
                     )
                 V[r] = a
-            nrm = pdf["nrm"].to_numpy()  # Catalyst _norm, attached upstream
+            # norms from the bucket kernel's numpy left-fold (pinned
+            # bit-identical to Catalyst _norm by test)
+            nrm = pdf["nrm"].to_numpy()
             codes = [
                 pd.factorize(pdf[prev_b[tp]])[0] for tp in range(t)
             ]
@@ -657,8 +651,9 @@ def embedding_neardup_pairs(
             ]
             # row-banded pair generation: anchors i in [s, e) pair with
             # every j > i. Band size is chosen so one band's pair count is
-            # ~2^21 — peak scratch stays bounded no matter how hot the
-            # bucket (no O(m²)-at-once triu materialization).
+            # ~2^21 — per-band scratch stays bounded no matter how hot the
+            # bucket (no O(m²)-at-once triu materialization); the pairs
+            # that pass the threshold are not bounded (see above).
             band = max(1, (1 << 21) // m)
             for s in range(0, m - 1, band):
                 e = min(s + band, m - 1)

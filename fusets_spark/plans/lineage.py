@@ -27,10 +27,12 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections.abc import Iterable
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 @dataclass
@@ -53,37 +55,55 @@ class Manifest:
     supersedes: list[str] | None = None
 
 
-def _manifest_stats(df: DataFrame) -> tuple[int, str, str, str]:
-    """ONE aggregation pass -> (row count, order-insensitive content hash,
-    min/max bucket_ts as ISO strings — empty if the column is absent).
-    Hash = bit_xor fold of xxhash64 over every column of every row
-    (canonicalized to strings) plus a modular sum — both order-insensitive
-    and overflow-free, identical under any partitioning/parallelism. The
+def _stats_aggs(cols: list[str]) -> list:
+    """The manifest's ONE aggregation list: row count, order-insensitive
+    content hash, and min/max bucket_ts when that column exists. Hash = bit_xor fold
+    of xxhash64 over every column of every row (canonicalized to strings)
+    plus a modular sum — both order-insensitive and overflow-free,
+    identical under any partitioning/parallelism or grouping. The
     (xor, modsum, count) triple makes accidental collisions (duplicate-row
     cancellation in xor) detectable."""
-    cols = [F.col(c).cast("string") for c in df.columns]
-    row_hash = F.xxhash64(*cols)
-    has_ts = "bucket_ts" in df.columns
+    row_hash = F.xxhash64(*[F.col(c).cast("string") for c in cols])
     aggs = [
         F.count(F.lit(1)).alias("n"),
-        F.expr(f"bit_xor(xxhash64({', '.join(f'cast(`{c}` as string)' for c in df.columns)}))").alias("x"),
+        F.bit_xor(row_hash).alias("x"),
         F.sum(F.pmod(row_hash, F.lit(2**31))).alias("s"),
     ]
-    if has_ts:
+    if "bucket_ts" in cols:
         aggs += [F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi")]
-    agg = df.agg(*aggs).collect()[0]
-    n = int(agg["n"])
-    x = int(agg["x"] or 0) & 0xFFFFFFFFFFFFFFFF
-    s = int(agg["s"] or 0) % (2**31)
-    lo = str(agg["lo"]) if has_ts and agg["lo"] is not None else ""
-    hi = str(agg["hi"]) if has_ts and agg["hi"] is not None else ""
-    return n, f"{x:016x}-{s:08x}", lo, hi
+    return aggs
+
+
+def _fold_stats(r) -> tuple[int, str, str, str]:
+    """(row count, content hash, ISO min/max bucket_ts — empty when absent)
+    from one row of _stats_aggs."""
+    d = r.asDict()
+    x = int(d["x"] or 0) & 0xFFFFFFFFFFFFFFFF
+    s = int(d["s"] or 0) % (2**31)
+    lo, hi = ("" if d.get(k) is None else str(d[k]) for k in ("lo", "hi"))
+    return int(d["n"]), f"{x:016x}-{s:08x}", lo, hi
 
 
 def content_hash(df: DataFrame) -> tuple[int, str]:
-    """(row count, order-insensitive content hash) — see _manifest_stats."""
-    n, h, _, _ = _manifest_stats(df)
+    """(row count, order-insensitive content hash) — the manifest's fold."""
+    n, h, _, _ = _fold_stats(df.agg(*_stats_aggs(df.columns)).collect()[0])
     return n, h
+
+
+def _part_cols(cols: list[str]) -> list[str]:
+    """Partition columns of a frame holding a `batch` column."""
+    return ["batch"] + (["source"] if "source" in cols else [])
+
+
+def _leaf_dir(*roots: str) -> str | None:
+    """First directory under the first root that has one (sorted walk)
+    holding a parquet data file, or None."""
+    for root in roots:
+        for d, subdirs, files in os.walk(root):
+            subdirs.sort()
+            if any(f.endswith(".parquet") for f in files):
+                return d
+    return None
 
 
 class TierStore:
@@ -147,103 +167,6 @@ class TierStore:
         os.replace(tmp, p)  # atomic on POSIX
 
     # --- batch commit
-    def write_batches(
-        self,
-        df: DataFrame,
-        tier: str,
-        batch_col: str,
-        config_hash: str,
-    ) -> dict[str, "Manifest"]:
-        """Commit MANY batches from one DataFrame in O(1) Spark jobs —
-        protocol-equivalent to calling write_batch once per distinct value
-        of `batch_col`, but with ONE partitioned write and ONE grouped
-        manifest-stats pass instead of 2×N jobs (a write_batch loop
-        re-executes the input plan and runs a stats aggregation per batch;
-        at 52 weekly batches that was 104 sequential jobs for seconds of
-        actual data). Same batch=<id>/source=<s>/ layout, same manifest
-        fields (the content hash is an order-insensitive xor/modsum fold,
-        so per-batch values are identical to the loop's), watermarks left
-        to the caller exactly like write_batch."""
-        import shutil
-
-        data_cols = [c for c in df.columns if c != batch_col]
-        out = df.withColumnRenamed(batch_col, "batch")
-        batch_ids = sorted(
-            r["batch"] for r in out.select("batch").distinct().collect()
-        )  # bounded: one row per batch
-        for bid in batch_ids:
-            part = os.path.join(self.tier_path(tier), f"batch={bid}")
-            shutil.rmtree(part, ignore_errors=True)
-        part_cols = ["batch"] + (["source"] if "source" in data_cols else [])
-        # cluster rows by the partition dirs before writing (guide §6):
-        # without this every write task sprays a file into every
-        # batch=/source= dir it touches — N_tasks × N_dirs small files
-        (
-            out.repartition(*part_cols)
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.tier_path(tier))
-        )
-        spark = df.sparkSession
-        infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        try:
-            prev_infer = spark.conf.get(infer_key)
-        except Exception:
-            prev_infer = None
-        spark.conf.set(infer_key, "false")
-        try:
-            schema = {f.name: f.dataType for f in df.schema.fields}
-            back = (
-                spark.read.option("basePath", self.tier_path(tier))
-                .parquet(
-                    *[
-                        os.path.join(self.tier_path(tier), f"batch={bid}")
-                        for bid in batch_ids
-                    ]
-                )
-                .select(
-                    "batch",
-                    *[F.col(c).cast(schema[c]).alias(c) for c in data_cols],
-                )
-            )
-            # the same aggregate set _manifest_stats runs, grouped by batch
-            # (all order-insensitive => identical per-batch values)
-            cast_cols = ", ".join(f"cast(`{c}` as string)" for c in data_cols)
-            row_hash = F.xxhash64(*[F.col(c).cast("string") for c in data_cols])
-            aggs = [
-                F.count(F.lit(1)).alias("n"),
-                F.expr(f"bit_xor(xxhash64({cast_cols}))").alias("x"),
-                F.sum(F.pmod(row_hash, F.lit(2**31))).alias("s"),
-            ]
-            has_ts = "bucket_ts" in data_cols
-            if has_ts:
-                aggs += [
-                    F.min("bucket_ts").alias("lo"),
-                    F.max("bucket_ts").alias("hi"),
-                ]
-            stats = {r["batch"]: r for r in back.groupBy("batch").agg(*aggs).collect()}
-        finally:
-            if prev_infer is None:
-                spark.conf.unset(infer_key)
-            else:
-                spark.conf.set(infer_key, prev_infer)
-        mans: dict[str, Manifest] = {}
-        for bid in batch_ids:
-            r = stats[bid]
-            x = int(r["x"] or 0) & 0xFFFFFFFFFFFFFFFF
-            s = int(r["s"] or 0) % (2**31)
-            lo = str(r["lo"]) if has_ts and r["lo"] is not None else ""
-            hi = str(r["hi"]) if has_ts and r["hi"] is not None else ""
-            part = os.path.join(self.tier_path(tier), f"batch={bid}")
-            m = Manifest(
-                tier, bid, int(r["n"]), f"{x:016x}-{s:08x}", config_hash,
-                self._tree_bytes(part), lo, hi,
-            )
-            self._write_manifest(m)
-            mans[bid] = m
-        return mans
-
     def write_batch(
         self,
         df: DataFrame,
@@ -252,70 +175,129 @@ class TierStore:
         config_hash: str,
         supersedes: list[str] | None = None,
     ) -> Manifest:
-        """Steps 1-3 of the protocol (caller advances the watermark).
-        `supersedes`: batch ids this batch rewrites (compaction) — recorded
-        in THIS batch's manifest so snapshot readers drop the sources
-        atomically with this batch's commit.
+        """Steps 2-3 of the protocol for one batch (caller advances the
+        watermark). `supersedes`: batch ids this batch rewrites
+        (compaction) — recorded in THIS batch's manifest so snapshot
+        readers drop the sources atomically with this batch's commit.
 
         Layout: batch=<id>/source=<s>/ — the source subpartition gives
         partition pruning on the hot filter dimension (the Iceberg analog
         is PARTITIONED BY (batch, source, hours(bucket_ts)))."""
-        # An uncommitted batch=<id> tree from a crashed earlier attempt may
-        # hold source= subpartitions the new df no longer produces — dynamic
-        # overwrite would leave them in place (and the read-back below would
-        # hash stale rows). The batch is uncommitted, so dropping the whole
-        # partition first is exactly the overwrite semantics we want.
+        out = df.withColumn("batch", F.lit(batch_id))
+        return self._commit(out, tier, [batch_id], config_hash, supersedes)[
+            batch_id
+        ]
+
+    def write_batches(
+        self,
+        df: DataFrame,
+        tier: str,
+        batch_col: str,
+        config_hash: str,
+    ) -> dict[str, Manifest]:
+        """Commit MANY batches from one DataFrame in O(1) Spark jobs —
+        protocol-equivalent to calling write_batch once per distinct value
+        of `batch_col` (a write_batch loop re-executes the input plan and
+        runs a stats aggregation per batch; at 52 weekly batches that was
+        104 sequential jobs for seconds of actual data). Watermarks are
+        left to the caller, as with write_batch. Rows are clustered by
+        their partition dirs before the write: without it every write
+        task sprays a file into every batch=/source= dir it touches."""
+        out = df.withColumnRenamed(batch_col, "batch")
+        batch_ids = sorted(
+            r["batch"] for r in out.select("batch").distinct().collect()
+        )  # bounded: one row per batch
+        return self._commit(
+            out.repartition(*_part_cols(out.columns)), tier, batch_ids,
+            config_hash,
+        )
+
+    def _commit(
+        self,
+        out: DataFrame,
+        tier: str,
+        batch_ids: list[str],
+        config_hash: str,
+        supersedes: list[str] | None = None,
+    ) -> dict[str, Manifest]:
+        """The one commit routine: write `out` (data columns + a string
+        `batch` column holding `batch_ids`) and each batch's manifest.
+
+        An uncommitted batch=<id> tree from a crashed earlier attempt may
+        hold source= subpartitions the new rows no longer produce — dynamic
+        overwrite would leave them in place (and the read-back would hash
+        stale rows). The batches are uncommitted, so dropping their whole
+        trees first is exactly the overwrite semantics wanted.
+
+        Manifest stats come from the JUST-WRITTEN files, not a second
+        execution of the input plan, in one pass grouped by batch. The
+        read-back names its schema (the input's plus `batch string`), so
+        partition values like '0123' stay strings without touching the
+        session's partition-type inference, and no footer is read to
+        infer it."""
         import shutil
 
-        part = os.path.join(self.tier_path(tier), f"batch={batch_id}")
-        shutil.rmtree(part, ignore_errors=True)
-        out = df.withColumn("batch", F.lit(batch_id))
-        part_cols = ["batch"] + (["source"] if "source" in df.columns else [])
+        path = self.tier_path(tier)
+        for bid in batch_ids:
+            shutil.rmtree(os.path.join(path, f"batch={bid}"), ignore_errors=True)
+        data = [f for f in out.schema.fields if f.name != "batch"]
+        data_cols = [f.name for f in data]
         (
             out.write.mode("overwrite")
-            .partitionBy(*part_cols)
+            .partitionBy(*_part_cols(out.columns))
             .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.tier_path(tier))
+            .parquet(path)
         )
-        # manifest stats come from the JUST-WRITTEN partition files, not a
-        # second execution of the input plan — on the unfused path the input
-        # is the full corpus scan and recomputing it doubles the batch cost.
-        # Partition-column type inference is disabled for the read-back (a
-        # numeric-looking source like '0123' must not round-trip as 123);
-        # casting to the input schema then restores exact dtypes.
-        spark = df.sparkSession
-        infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        try:
-            prev_infer = spark.conf.get(infer_key)
-        except Exception:
-            prev_infer = None
-        spark.conf.set(infer_key, "false")
-        try:
-            back = (
-                spark.read.option("basePath", self.tier_path(tier))
-                .parquet(part)
-                .select(
-                    *[
-                        F.col(f.name).cast(f.dataType)
-                        for f in df.schema.fields
-                    ]
-                )
+        parts = {bid: os.path.join(path, f"batch={bid}") for bid in batch_ids}
+        back = (
+            out.sparkSession.read.schema(
+                StructType(data + [StructField("batch", StringType())])
             )
-            n, h, lo, hi = _manifest_stats(back)
-        finally:
-            # restore the session-wide flag — leaving it flipped changes how
-            # partition columns type-infer in every later unrelated read
-            if prev_infer is None:
-                spark.conf.unset(infer_key)
-            else:
-                spark.conf.set(infer_key, prev_infer)
-        n_bytes = self._tree_bytes(part)
-        m = Manifest(
-            tier, batch_id, n, h, config_hash, n_bytes, lo, hi,
-            supersedes=sorted(supersedes) if supersedes else None,
+            .option("basePath", path)
+            .parquet(*parts.values())
         )
-        self._write_manifest(m)
-        return m
+        stats = {
+            r["batch"]: _fold_stats(r)
+            for r in back.groupBy("batch").agg(*_stats_aggs(data_cols)).collect()
+        }
+        mans: dict[str, Manifest] = {}
+        for bid, part in parts.items():
+            n, h, lo, hi = stats[bid]
+            m = Manifest(
+                tier, bid, n, h, config_hash, self._tree_bytes(part), lo, hi,
+                supersedes=sorted(supersedes) if supersedes else None,
+            )
+            self._write_manifest(m)
+            mans[bid] = m
+        return mans
+
+    def read(
+        self, spark: SparkSession, tier: str, batch_ids: Iterable[str]
+    ) -> DataFrame:
+        """The tier's rows of `batch_ids`, partition columns (`batch`,
+        `source`) as strings. The data schema comes from one leaf
+        directory — a read that discovers no partitions — and the
+        partition columns are appended as strings, so the scan runs no
+        partition-type inference: a numeric-looking id like '0123' stays a
+        string, and the batch filter stays a plan-time partition-pruning
+        predicate."""
+        path = self.tier_path(tier)
+        ids = sorted(batch_ids)
+        leaf = _leaf_dir(*[os.path.join(path, f"batch={b}") for b in ids], path)
+        if leaf is None:
+            raise FileNotFoundError(f"no parquet data under {path}")
+        schema = StructType(
+            spark.read.parquet(leaf).schema.fields
+            + [
+                StructField(d.split("=", 1)[0], StringType())
+                for d in os.path.relpath(leaf, path).split(os.sep)
+            ]
+        )
+        return (
+            spark.read.schema(schema)
+            .parquet(path)
+            .filter(F.col("batch").isin(ids))
+        )
 
     # --- snapshot-consistent read set
     def live_batches(self, tier: str) -> set[str]:

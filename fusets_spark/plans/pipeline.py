@@ -1,11 +1,12 @@
 """The continuous-aggregate rollup pipeline (north rule's production job).
 
 Incremental batch processing over an append-only tokenized-sequence table:
-each input batch flows through the shuffle-free ladder
-(rollup_ladder_from_tokens) and the Gorilla block encoder
-(encode_blocks_from_tokens); every tier + the block store commit per batch
-through the TierStore protocol (lineage manifest -> atomic watermark), so a
-kill at ANY point resumes to byte-identical content (tested).
+each input batch is scanned ONCE by the fused ingest (operators/ingest.py:
+the shuffle-free rollup ladder and the Gorilla block encoder over one
+decode), and every tier + the block store commit from that one persisted
+frame through the TierStore protocol (lineage manifest -> atomic
+watermark), so a kill at ANY point resumes to byte-identical content
+(tested). Nothing is staged outside the store.
 
 Deployment shape (cluster): `spark-submit --py-files fusets_spark.zip
 fusets_spark/plans/pipeline.py <input> <store>` against Iceberg; batches =
@@ -23,10 +24,9 @@ import hashlib
 import json
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..codec.blocks import encode_blocks_from_tokens
-from ..operators.rollup import TIERS, rollup_ladder_from_tokens
+from ..operators import ingest
+from ..operators.rollup import TIERS
 from .lineage import TierStore
 
 STAGES = [*TIERS.keys(), "blocks"]
@@ -39,29 +39,6 @@ DEFAULT_RETENTION: dict[str, float | None] = {
     "5m": 180 * 86400.0,
     "1h": None,
 }
-
-
-def _read_tier_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Read a tier's partitioned parquet with partition-column type
-    inference OFF (save/restore, mirroring write_batch): a numeric-
-    looking batch id like '0123' would otherwise infer as int and the
-    string isin() batch filters would silently drop every row. Keeping
-    `batch` a string also keeps those filters plan-time partition-pruning
-    predicates. Inference happens eagerly at read() time, so restoring
-    the conf afterwards is safe."""
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    try:
-        prev_infer = spark.conf.get(infer_key)
-    except Exception:
-        prev_infer = None
-    spark.conf.set(infer_key, "false")
-    try:
-        return spark.read.parquet(path)
-    finally:
-        if prev_infer is None:
-            spark.conf.unset(infer_key)
-        else:
-            spark.conf.set(infer_key, prev_infer)
 
 
 def _config_hash(cfg: dict) -> str:
@@ -83,99 +60,54 @@ class RollupPipeline:
         self.t0 = t0
         self.block_seconds = block_seconds
 
-    def _stage_df(self, tokens: DataFrame, stage: str) -> DataFrame:
-        if stage == "blocks":
-            return encode_blocks_from_tokens(
-                tokens, t0=self.t0, block_seconds=self.block_seconds
-            )
-        # order keys stored with every tier row so cross-batch partials for
-        # the same (series, bucket) — late data — merge EXACTLY on read
-        ladder = rollup_ladder_from_tokens(
-            tokens, t0=self.t0, with_order_keys=True
-        )
-        return ladder.filter(ladder["tier"] == stage).drop("tier")
-
-    def _staged_stage_df(self, staged: DataFrame, stage: str) -> DataFrame:
-        if stage == "blocks":
-            return staged.filter(staged["kind"] == "block").select(
-                "source", "doc_id", "bucket_ts", "n_points",
-                "min_ts", "max_ts", "codec", "block",
-            )
-        return staged.filter(
-            (staged["kind"] == "tier") & (staged["tier"] == stage)
-        ).select(
-            "source", "doc_id", "bucket_ts", "n_obs", "sum_val",
-            "min_val", "max_val", "first_val", "last_val", "avg_val",
-            "first_pos", "last_pos",
-        )
-
     def process_batch(
         self,
         tokens: DataFrame,
         batch_id: str,
         fail_after_stage: str | None = None,
-        fused: bool = True,
     ) -> None:
-        """Commit one input batch through every stage. `fail_after_stage`
-        simulates an executor/driver loss mid-commit (for the resume test):
-        the stage's data+manifest are written but the watermark is NOT.
+        """Commit one input batch through every pending stage. ONE token
+        scan (the fused ingest, persisted for the batch) feeds every tier
+        and the blocks; each stage commits its slice of it, then advances
+        its watermark, in STAGES order. Committed stages are skipped, so a
+        crash at any point resumes with the stages left (content is
+        byte-identical either way — the fused operator shares the separate
+        operators' frame builders).
 
-        fused=True (default, and the 10^12-scale path): ONE token scan
-        materializes every tier + the blocks into an uncommitted staging
-        dir (operators/ingest.py); each stage then commits from the cheap
-        staged parquet instead of re-scanning the corpus — 4 corpus scans
-        -> 1. Staging is overwrite-idempotent: a crash at any point
-        resumes by re-materializing it, and committed stages are skipped
-        exactly as before (content is byte-identical either way — the
-        fused operator shares the separate operators' frame builders)."""
-        import shutil
-
-        staging = f"{self.store.root}/_staging/{batch_id}"
+        `fail_after_stage` simulates a process loss mid-commit (for the
+        resume test): the stage's data+manifest are written but the
+        watermark is NOT."""
         pending = [
             s for s in STAGES if not self.store.is_committed(s, batch_id)
         ]
         if not pending:
-            # a crashed fused run may have left staging behind after its
-            # last stage committed — clean it whenever the batch is done
-            shutil.rmtree(staging, ignore_errors=True)
             return
-        if fused and len(pending) > 1:
-            from ..operators.ingest import ingest_from_tokens
-
-            spark = tokens.sparkSession
-            ingest_from_tokens(
-                tokens,
-                t0=self.t0,
-                block_seconds=self.block_seconds,
-                with_order_keys=True,
-            ).write.mode("overwrite").parquet(staging)
-            staged = spark.read.parquet(staging)
-            for stage in STAGES:
-                if self.store.is_committed(stage, batch_id):
-                    continue
-                self.store.write_batch(
-                    self._staged_stage_df(staged, stage),
-                    stage, batch_id, self.cfg_hash,
+        # order keys stored with every tier row so cross-batch partials for
+        # the same (series, bucket) — late data — merge EXACTLY on read;
+        # persisted because each stage's write would otherwise re-run the
+        # whole token scan
+        ingested = ingest.ingest_from_tokens(
+            tokens,
+            t0=self.t0,
+            block_seconds=self.block_seconds,
+            with_order_keys=True,
+        ).persist()
+        try:
+            tiers, blocks = ingest.split_ingest(ingested)
+            for stage in pending:
+                df = (
+                    blocks
+                    if stage == "blocks"
+                    else tiers.filter(tiers["tier"] == stage).drop("tier")
                 )
+                self.store.write_batch(df, stage, batch_id, self.cfg_hash)
                 if fail_after_stage == stage:
                     raise RuntimeError(
                         f"simulated failure after {stage}/{batch_id}"
                     )
                 self.store.commit_watermark(stage, batch_id)
-            shutil.rmtree(staging, ignore_errors=True)
-            return
-        for stage in STAGES:
-            if self.store.is_committed(stage, batch_id):
-                continue  # already committed (resume path)
-            self.store.write_batch(
-                self._stage_df(tokens, stage), stage, batch_id, self.cfg_hash
-            )
-            if fail_after_stage == stage:
-                raise RuntimeError(f"simulated failure after {stage}/{batch_id}")
-            self.store.commit_watermark(stage, batch_id)
-        # non-fused completion of a batch whose fused run crashed with one
-        # stage left: its orphaned staging parquet is no longer needed
-        shutil.rmtree(staging, ignore_errors=True)
+        finally:
+            ingested.unpersist()
 
     def run(
         self,
@@ -221,9 +153,7 @@ class RollupPipeline:
             if as_of_batches is not None
             else self.store.live_batches(stage)
         )
-        df = _read_tier_parquet(spark, self.store.tier_path(stage)).filter(
-            F.col("batch").isin(sorted(live))
-        )
+        df = self.store.read(spark, stage, live)
         if merged and stage != "blocks":
             from ..operators.rollup import merge_tier_partials
 
@@ -318,11 +248,7 @@ class RollupPipeline:
         from ..codec.blocks import compact_blocks
 
         if not self.store.is_committed("blocks", new_batch_id):
-            src = (
-                _read_tier_parquet(spark, self.store.tier_path("blocks"))
-                .filter(F.col("batch").isin(batch_ids))
-                .drop("batch")
-            )
+            src = self.store.read(spark, "blocks", batch_ids).drop("batch")
             compacted = compact_blocks(src, target_seconds)
             self.store.write_batch(
                 compacted, "blocks", new_batch_id,

@@ -89,6 +89,21 @@ def test_query_matches_duckdb_oracle(spark, duck, name):
             )
 
 
+def test_every_query_function_is_registered():
+    """Each top-level q_* in __spark_entry__.py is a queries() entry (an
+    unregistered one is code nothing runs), and queries() and
+    oracle_sql() hold the same 50 keys."""
+    mod = _entry_mod()
+    registered = set(mod.queries().values())
+    defined = {
+        name: fn for name, fn in vars(mod).items()
+        if name.startswith("q_") and callable(fn)
+    }
+    assert sorted(n for n, fn in defined.items() if fn not in registered) == []
+    assert len(mod.queries()) == 50
+    assert set(mod.queries()) == set(mod.oracle_sql())
+
+
 def test_entry_smoke(spark):
     mod = _entry_mod()
     df = mod.entry(spark)

@@ -127,20 +127,129 @@ def test_resume_with_non_padded_batch_ids(spark, tmp_path):
 
 
 def test_read_tier_numeric_looking_batch_id(spark, tmp_path):
-    """A numeric-looking batch id like '0123' must survive read_tier:
-    partition-column type inference would coerce it to int 123 and the
-    string isin() filter would silently drop every row (write_batch
-    already disables inference; the read path must too)."""
+    """A numeric-looking batch id like '0123' and source like '0456' must
+    round-trip as strings through the commit (manifest hash over the
+    written rows), read_tier and compaction: partition-column type
+    inference would coerce them to ints 123/456, the string isin() batch
+    filter would silently drop every row, and the hashes would fold
+    '456' instead of '0456'."""
+    from pyspark.sql import functions as F
+
+    from fusets_spark.plans.lineage import content_hash
+
     root = str(tmp_path / "numeric")
     toks = generate_tokens(spark, 20, seed=3, min_tok=32, max_tok=64)
+    toks = toks.withColumn(
+        "source",
+        F.when(F.col("source") == "s2ndvi", "0456").otherwise(F.col("source")),
+    )
+    sources = {r["source"] for r in toks.select("source").distinct().collect()}
+    assert "0456" in sources and len(sources) > 1
     pipe = RollupPipeline(root)
     pipe.run(spark, {"0123": toks})
-    got = pipe.read_tier(spark, "1m")
-    assert got.count() > 0
-    assert dict(got.dtypes)["batch"] == "string"
+    for stage in STAGES:
+        got = pipe.read_tier(spark, stage)
+        assert dict(got.dtypes)["batch"] == "string"
+        assert dict(got.dtypes)["source"] == "string"
+        assert {r["batch"] for r in got.select("batch").distinct().collect()} \
+            == {"0123"}
+        assert {
+            r["source"] for r in got.select("source").distinct().collect()
+        } == sources
+        # the written frames lead with `source`; the read appends it last
+        cols = ["source"] + [
+            c for c in got.columns if c not in ("source", "batch")
+        ]
+        m = pipe.store.manifest(stage, "0123")
+        assert content_hash(got.select(cols)) == (m.n_rows, m.content_hash)
+
+    points = pipe.read_tier(spark, "blocks").agg(F.sum("n_points")).collect()
+    pipe.compact_block_batches(spark, ["0123"], "0789", 86400)
+    got = pipe.read_tier(spark, "blocks")
     assert {r["batch"] for r in got.select("batch").distinct().collect()} \
-        == {"0123"}
+        == {"0789"}
+    assert {
+        r["source"] for r in got.select("source").distinct().collect()
+    } == sources
+    assert got.agg(F.sum("n_points")).collect() == points
     shutil.rmtree(root)
+
+
+def test_read_tier_merged_requires_order_keys(spark, tmp_path):
+    """read_tier(merged=True) on a tier written without first_pos/last_pos
+    cannot merge late partials exactly and must refuse."""
+    from fusets_spark.operators.explode import explode_raw
+    from fusets_spark.operators.rollup import rollup_from_raw
+
+    pipe = RollupPipeline(str(tmp_path / "nokeys"))
+    toks = generate_tokens(spark, 10, seed=4, min_tok=32, max_tok=64)
+    pipe.store.write_batch(
+        rollup_from_raw(explode_raw(toks), "1m"), "1m", "b1", "cfg"
+    )
+    pipe.store.commit_watermark("1m", "b1")
+    assert pipe.read_tier(spark, "1m").count() > 0
+    with pytest.raises(ValueError, match="order-key columns"):
+        pipe.read_tier(spark, "1m", merged=True)
+
+
+def test_commit_and_reads_leave_session_conf_alone(spark, tmp_path, monkeypatch):
+    """The commit, the tier read and compaction must never flip the
+    session-global partition-inference conf: a save/restore toggle races
+    with every concurrent query in the session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    touched = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def spy_set(self, key, value):
+        touched.append(key)
+        return real_set(self, key, value)
+
+    def spy_unset(self, key):
+        touched.append(key)
+        return real_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", spy_unset)
+    pipe = RollupPipeline(str(tmp_path / "conf"), block_seconds=60)
+    pipe.process_batch(
+        generate_tokens(spark, 10, seed=5, min_tok=32, max_tok=64), "b1"
+    )
+    assert pipe.read_tier(spark, "1m", merged=True).count() > 0
+    pipe.compact_block_batches(spark, ["b1"], "compact-1", 3600)
+    assert pipe.read_tier(spark, "blocks").count() > 0
+    assert not [k for k in touched if "partitionColumnTypeInference" in k]
+
+
+def test_failed_commit_unpersists_ingest(spark, tmp_path):
+    """process_batch persists its one ingest frame; a commit that raises
+    mid-batch must still release it."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    pipe = RollupPipeline(str(tmp_path / "persist"))
+    toks = generate_tokens(spark, 10, seed=6, min_tok=32, max_tok=64)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        pipe.process_batch(toks, "b1", fail_after_stage="5m")
+    assert set(jsc.getPersistentRDDs()) == before
+    pipe.process_batch(toks, "b1")
+    assert set(jsc.getPersistentRDDs()) == before
+    assert all(pipe.store.is_committed(s, "b1") for s in STAGES)
+
+
+def test_commit_job_count(spark, tmp_path):
+    """One batch commit runs one token scan and, per stage, one write plus
+    one read-back stats pass: 12 Spark jobs here. A staging write or a
+    read-back that infers its schema from footers adds jobs."""
+    sc = spark.sparkContext
+    pipe = RollupPipeline(str(tmp_path / "jobs"))
+    toks = generate_tokens(spark, 20, seed=7, min_tok=32, max_tok=64)
+    sc.setJobGroup("fusets-commit-job-count", "process_batch")
+    try:
+        pipe.process_batch(toks, "b1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("fusets-commit-job-count")
+    assert 0 < len(jobs) <= 12, len(jobs)
 
 
 def test_retention_drops_old_batches_keeps_lineage(spark, tmp_path):
@@ -229,23 +338,35 @@ def test_late_data_merged_read_exact(spark, tmp_path):
 
 
 def test_fused_pipeline_equals_per_stage_pipeline(spark, tmp_path):
-    """The fused single-scan process_batch must commit byte-identical tier
-    and block content to the per-stage (4-scan) path, and clean up its
-    staging dir."""
+    """process_batch (one fused ingest scan feeding every stage) must
+    commit byte-identical tier and block content to the separate
+    operators — the rollup ladder filtered per tier, and the block
+    encoder — with identical manifest hashes, and stage nothing outside
+    the store."""
     import os
 
-    from fusets_spark.datagen import generate_tokens
-    from fusets_spark.plans.pipeline import STAGES, RollupPipeline
+    from fusets_spark.codec.blocks import encode_blocks_from_tokens
+    from fusets_spark.operators.rollup import TIERS, rollup_ladder_from_tokens
+    from fusets_spark.plans.lineage import content_hash
 
     toks = generate_tokens(spark, 40, seed=8, min_tok=32, max_tok=200)
-    a = RollupPipeline(str(tmp_path / "fused"))
-    a.process_batch(toks, "b1", fused=True)
-    b = RollupPipeline(str(tmp_path / "stages"))
-    b.process_batch(toks, "b1", fused=False)
+    root = tmp_path / "store"
+    pipe = RollupPipeline(str(root))
+    pipe.process_batch(toks, "b1")
 
+    ladder = rollup_ladder_from_tokens(toks, t0=pipe.t0, with_order_keys=True)
+    direct = {
+        stage: ladder.filter(ladder["tier"] == stage).drop("tier")
+        for stage in TIERS
+    }
+    direct["blocks"] = encode_blocks_from_tokens(
+        toks, t0=pipe.t0, block_seconds=pipe.block_seconds
+    )
     for stage in STAGES:
-        pa = spark.read.parquet(a.store.tier_path(stage)).toPandas()
-        pb = spark.read.parquet(b.store.tier_path(stage)).toPandas()
+        m = pipe.store.manifest(stage, "b1")
+        assert content_hash(direct[stage]) == (m.n_rows, m.content_hash), stage
+        pa = pipe.read_tier(spark, stage).drop("batch").toPandas()
+        pb = direct[stage].toPandas()
         key = [c for c in ("source", "doc_id", "bucket_ts") if c in pa.columns]
         pa = pa.sort_values(key).reset_index(drop=True)
         pb = pb.sort_values(key)[pa.columns].reset_index(drop=True)
@@ -260,7 +381,7 @@ def test_fused_pipeline_equals_per_stage_pipeline(spark, tmp_path):
                     pa[col].astype(str).to_numpy()
                     == pb[col].astype(str).to_numpy()
                 ).all(), f"{stage}.{col} differs"
-    assert not os.path.exists(str(tmp_path / "fused" / "_staging" / "b1"))
+    assert sorted(os.listdir(root)) == ["manifests", "tiers", "watermarks"]
 
 
 def test_block_batch_compaction_lifecycle(spark, tmp_path):
@@ -423,8 +544,13 @@ def test_snapshot_read_consistency(spark, tmp_path):
 
     # (1) crashed write: partition lands on disk, no manifest/commit
     t3 = generate_tokens(spark, 10, seed=3, min_tok=32, max_tok=128)
-    staged = pipe._stage_df(t3, "blocks")
     from pyspark.sql import functions as F
+
+    from fusets_spark.codec.blocks import encode_blocks_from_tokens
+
+    staged = encode_blocks_from_tokens(
+        t3, t0=pipe.t0, block_seconds=pipe.block_seconds
+    )
 
     staged.withColumn("batch", F.lit("crashed")).write.mode(
         "append"
